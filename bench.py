@@ -68,7 +68,9 @@ def _validate_pages_job(spark, path: str) -> tuple[int, int]:
         n = sum(r["rows_scanned"] for r in verdicts)
         n_viol = res["violations"].count()
     finally:
-        res["slim"].unpersist()
+        for key in ("slim", "slim_heavy"):
+            if res[key] is not None:
+                res[key].unpersist()
     return n, n_viol
 
 

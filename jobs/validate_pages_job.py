@@ -90,7 +90,9 @@ def main(argv=None):
                 .write.mode("overwrite").partitionBy("partition_key")
                 .parquet(f"{args.output}/stats"))
         finally:
-            res["slim"].unpersist()
+            for key in ("slim", "slim_heavy"):
+                if res[key] is not None:
+                    res[key].unpersist()
         counts = {r["partition_key"]: (r["rows_scanned"],
                                        r["violation_count"])
                   for r in verdicts}

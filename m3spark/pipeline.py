@@ -20,13 +20,12 @@ from pyspark.sql import functions as F
 from m3spark.columnar import ColumnarValidator
 from m3spark.pages import PAGES_SCHEMA
 
-# Validator memo: instances are pure compilations of (schema,
-# format_assertion) and cache their built Column expressions, so the
-# bench/scaling loop — which calls validate_pages on the same table
-# every iteration — skips the py4j expression reconstruction (~1.2 s
-# per call of pure driver time that the 4N scaling level cannot
-# parallelize).  Expressions only: every call still plans and computes
-# from its input; no results, plans, or shuffles are reused.
+# Validator memo: instances are pure-Python compilations of (schema,
+# format_assertion).  Each keeps its own memo of built Columns, which are
+# pure functions of the ordered input fields and the live JVM
+# (ColumnarValidator._exprs), so validating a schema again skips both the
+# compile and the py4j expression construction.  Every call still plans
+# and computes from its input; no results, plans or shuffles are reused.
 _CV_CACHE: dict = {}
 
 
@@ -75,6 +74,16 @@ def _heavy_null_only_cols(schema: dict, pages: DataFrame, key_col: str,
             and dtypes.get(c) == "binary"]
 
 
+def _ident(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def validate_pages(pages: DataFrame, schema: dict | None = None,
                    key_col: str = "url",
                    partition_expr: str = "to_date(warc_ts)",
@@ -85,12 +94,28 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
 
     Returns dict of lazy DataFrames:
       - ``rows``: input + violations + valid (full width)
-      - ``slim``: (key, partition_key, valid, violations) — the shared
-        core of the downstream jobs; persisted when ``persist=True``
-        (caller unpersists)
+      - ``slim``: (key, partition_key, valid, violations) of the rows
+        the value scan finds a violation in — the shared core of the
+        downstream jobs
+      - ``slim_heavy``: (key, partition_key, hviols, other_err) of the
+        rows that fail a ``required`` on a heavy column, or None.  A
+        binary column whose only constraint is a top-level ``required``
+        (``html`` in ``PAGES_SCHEMA``) stays out of the value scan, so a
+        row that fails only that ``required`` is here and not in
+        ``slim``.  ``hviols`` are those required violations;
+        ``other_err`` says the row also has another error.
       - ``violations``: exploded north-star violation table
       - ``partition_verdicts``: per-partition pass/fail + counts
+      - ``validator``: the ColumnarValidator for ``schema``
+
+    With ``persist=True`` both ``slim`` and ``slim_heavy`` are
+    persisted, and the caller must unpersist both (``slim_heavy`` when
+    it is not None).
     """
+    # The plumbing below is SQL text (selectExpr, string where, F.expr):
+    # the JVM parses each string in one call, where the same Column tree
+    # costs several py4j round trips per node.  Only the validators'
+    # check expressions are Column trees, and they memoize themselves.
     schema = schema or PAGES_SCHEMA
     cv = _validator(schema, format_assertion)
     rows = cv.apply(pages)
@@ -143,149 +168,93 @@ def validate_pages(pages: DataFrame, schema: dict | None = None,
     except ValueError:
         bad = light
         prefiltered = False
-    slim = cv_light.apply(bad).select(
-        F.col(key_col),
-        F.expr(partition_expr).alias("partition_key"),
-        "valid", "violations")
+    pk = f"{partition_expr} AS partition_key"
+    slim = cv_light.apply(bad).selectExpr(key_col, pk, "valid",
+                                          "violations")
     if not prefiltered:
         # the prefilter predicate is exactly OR(~ok_i) == "violations
         # non-empty", so when it ran this filter is redundant — and far
         # from free: predicate pushdown substitutes the whole
         # violations expression into the pushed filter, re-evaluating
         # every check and struct per row below the projection
-        slim = slim.where(F.size("violations") > 0)
+        slim = slim.where("size(violations) > 0")
     if persist:
         slim = slim.persist()
 
-    ex = _pipe_exprs(key_col, partition_expr, tuple(heavy))
-
     slim_heavy = None
     if heavy:
+        msgs = ", ".join(_sql_str(f"required property {c!r} missing")
+                         for c in heavy)
+        is_heavy = (f"(v.keyword = 'required' AND v.doc_path = '' "
+                    f"AND v.message IN ({msgs}))")
         # reuse the already-built full-apply tree (a second cv.apply
         # costs ~0.5 s of py4j expression construction per call); the
         # IsNull filter commutes with the row-wise projection and is
         # pushed below it into the parquet scan
-        hv = rows.where(ex["null_any"])
-        slim_heavy = (hv.select(*ex["heavy_select"])
-                        .where(ex["hviols_nonempty"]))
+        slim_heavy = (
+            rows.where(" OR ".join(f"{_ident(c)} IS NULL" for c in heavy))
+                .selectExpr(key_col, pk,
+                            f"filter(violations, v -> {is_heavy}) AS hviols",
+                            "exists(violations, v -> v.level = 'error' "
+                            f"AND NOT {is_heavy}) AS other_err")
+                .where("size(hviols) > 0"))
         if persist:
             slim_heavy = slim_heavy.persist()
 
-    viol = slim.select(*ex["explode_violations"]).select(*ex["viol_cols"])
+    viol_cols = [key_col, "partition_key"] + [
+        f"v.{f} AS {f}" for f in ("keyword", "schema_path", "doc_path",
+                                  "message", "level", "value")]
+    viol = (slim.selectExpr(key_col, "partition_key",
+                            "explode(violations) AS v")
+                .selectExpr(*viol_cols))
     if slim_heavy is not None:
         viol = viol.unionByName(
-            slim_heavy.select(*ex["explode_hviols"])
-                      .select(*ex["viol_cols"]))
+            slim_heavy.selectExpr(key_col, "partition_key",
+                                  "explode(hviols) AS v")
+                      .selectExpr(*viol_cols))
     if with_uniqueness:
-        dups = (pages.groupBy(F.col(key_col))
-                     .agg(ex["dup_count"])
-                     .filter(F.col("dup_count") > 1))
+        dups = (pages.groupBy(key_col)
+                     .agg(F.expr("count(1) AS dup_count"))
+                     .where("dup_count > 1"))
         # a key duplicated ACROSS partitions has no single partition_key
         # (filled null by allowMissingColumns)
-        viol = viol.unionByName(dups.select(*ex["dup_select"]),
-                                allowMissingColumns=True)
+        viol = viol.unionByName(dups.selectExpr(
+            key_col,
+            "'uniqueItems' AS keyword",
+            "'/uniqueItems' AS schema_path",
+            f"{_sql_str('/' + key_col)} AS doc_path",
+            "concat('duplicate key: ', CAST(dup_count AS STRING), "
+            "' occurrences') AS message",
+            "'error' AS level"), allowMissingColumns=True)
 
-    totals = pages.groupBy(ex["pk"]).agg(ex["rows_scanned"])
-    viol_agg = slim.groupBy("partition_key").agg(*ex["viol_agg"])
+    totals = (pages.groupBy(F.expr(pk))
+                   .agg(F.expr("count(1) AS rows_scanned")))
+    viol_agg = slim.groupBy("partition_key").agg(
+        F.expr("sum(CAST(NOT valid AS BIGINT)) AS _invalid"),
+        F.expr("sum(size(violations)) AS _vcount"))
     verdicts = (totals.join(viol_agg, "partition_key", "left")
-                      .select(*ex["verdict_select"]))
+                      .selectExpr(
+                          "partition_key", "rows_scanned",
+                          "CAST(coalesce(_invalid, 0) AS BIGINT) "
+                          "AS invalid_rows",
+                          "CAST(coalesce(_vcount, 0) AS BIGINT) "
+                          "AS violation_count"))
     if slim_heavy is not None:
         # heavy-null rows add their required violations, and count as
         # newly-invalid only when the value scan saw no error for them
         # (no row is counted twice; error-level heavy violations only)
-        hagg = slim_heavy.groupBy("partition_key").agg(*ex["hagg"])
+        hagg = slim_heavy.groupBy("partition_key").agg(
+            F.expr("sum(CAST(exists(hviols, v -> v.level = 'error') "
+                   "AND NOT other_err AS BIGINT)) AS _hinvalid"),
+            F.expr("sum(size(hviols)) AS _hvcount"))
         verdicts = (verdicts.join(hagg, "partition_key", "left")
-                            .select(*ex["verdict_merge"]))
-    verdicts = verdicts.withColumn("passed", ex["passed"])
+                            .selectExpr(
+                                "partition_key", "rows_scanned",
+                                "CAST(invalid_rows + coalesce(_hinvalid, 0)"
+                                " AS BIGINT) AS invalid_rows",
+                                "CAST(violation_count + coalesce(_hvcount,"
+                                " 0) AS BIGINT) AS violation_count"))
+    verdicts = verdicts.withColumn("passed", F.expr("invalid_rows = 0"))
     return {"rows": rows, "slim": slim, "slim_heavy": slim_heavy,
             "violations": viol, "partition_verdicts": verdicts,
             "validator": cv}
-
-
-# Column-expression memo for the pipeline body: every entry is a pure
-# function of (key_col, partition_expr, heavy column list) — reused
-# across calls for the same reason as the validator expression caches
-# (expressions only; nothing about plans, data or shuffles is shared).
-_PIPE_EXPRS: dict = {}
-
-
-def _pipe_exprs(key_col: str, partition_expr: str,
-                heavy: tuple) -> dict:
-    memo_key = (key_col, partition_expr, heavy)
-    ex = _PIPE_EXPRS.get(memo_key)
-    if ex is not None:
-        return ex
-    ex = {
-        "pk": F.expr(partition_expr).alias("partition_key"),
-        "rows_scanned": F.count(F.lit(1)).alias("rows_scanned"),
-        "dup_count": F.count(F.lit(1)).alias("dup_count"),
-        "passed": F.col("invalid_rows") == 0,
-        "hviols_nonempty": F.size("hviols") > 0,
-    }
-    ex["explode_violations"] = [
-        F.col(key_col), F.col("partition_key"),
-        F.explode("violations").alias("v")]
-    ex["explode_hviols"] = [
-        F.col(key_col), F.col("partition_key"),
-        F.explode("hviols").alias("v")]
-    ex["viol_cols"] = [
-        F.col(key_col), F.col("partition_key"),
-        F.col("v.keyword").alias("keyword"),
-        F.col("v.schema_path").alias("schema_path"),
-        F.col("v.doc_path").alias("doc_path"),
-        F.col("v.message").alias("message"),
-        F.col("v.level").alias("level"),
-        F.col("v.value").alias("value")]
-    ex["dup_select"] = [
-        F.col(key_col),
-        F.lit("uniqueItems").alias("keyword"),
-        F.lit("/uniqueItems").alias("schema_path"),
-        F.lit("/" + key_col).alias("doc_path"),
-        F.concat(F.lit("duplicate key: "),
-                 F.col("dup_count").cast("string"),
-                 F.lit(" occurrences")).alias("message"),
-        F.lit("error").alias("level")]
-    ex["viol_agg"] = [
-        F.sum((~F.col("valid")).cast("long")).alias("_invalid"),
-        F.sum(F.size(F.col("violations"))).alias("_vcount")]
-    ex["verdict_select"] = [
-        F.col("partition_key"), F.col("rows_scanned"),
-        F.coalesce("_invalid", F.lit(0)).cast("long")
-         .alias("invalid_rows"),
-        F.coalesce("_vcount", F.lit(0)).cast("long")
-         .alias("violation_count")]
-    ex["verdict_merge"] = [
-        F.col("partition_key"), F.col("rows_scanned"),
-        (F.col("invalid_rows") + F.coalesce("_hinvalid", F.lit(0)))
-        .cast("long").alias("invalid_rows"),
-        (F.col("violation_count") + F.coalesce("_hvcount", F.lit(0)))
-        .cast("long").alias("violation_count")]
-    if heavy:
-        null_any = F.col(heavy[0]).isNull()
-        for c in heavy[1:]:
-            null_any = null_any | F.col(c).isNull()
-        ex["null_any"] = null_any
-        heavy_msgs = [f"required property {c!r} missing" for c in heavy]
-
-        def _is_heavy_req(v):
-            return ((v["keyword"] == "required")
-                    & (v["doc_path"] == "")
-                    & v["message"].isin(heavy_msgs))
-
-        ex["heavy_select"] = [
-            F.col(key_col),
-            F.expr(partition_expr).alias("partition_key"),
-            F.filter("violations", _is_heavy_req).alias("hviols"),
-            F.exists("violations",
-                     lambda v: (v["level"] == "error")
-                     & ~_is_heavy_req(v)).alias("other_err")]
-        ex["hagg"] = [
-            F.sum((F.exists("hviols",
-                            lambda v: v["level"] == "error")
-                   & ~F.col("other_err")).cast("long"))
-             .alias("_hinvalid"),
-            F.sum(F.size("hviols")).alias("_hvcount")]
-    if len(_PIPE_EXPRS) > 32:
-        _PIPE_EXPRS.clear()
-    _PIPE_EXPRS[memo_key] = ex
-    return ex

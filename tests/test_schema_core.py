@@ -71,7 +71,8 @@ def _m3_fixture_groups():
 
 @pytest.mark.parametrize(
     "fixture", _m3_fixture_groups(),
-    ids=lambda f: f"{f[0]}:{f[1]['description'][:48]}")
+    ids=lambda f: (f"{f[0]}:{f[1]['description'][:48]}"
+                   if isinstance(f, tuple) else None))
 def test_m3_regression_fixture(fixture):
     _, group = fixture
     cs = compile_schema(group["schema"])

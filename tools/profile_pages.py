@@ -82,7 +82,9 @@ def main():
             n = sum(r["rows_scanned"] for r in verdicts)
             res["violations"].count()
         finally:
-            res["slim"].unpersist()
+            for key in ("slim", "slim_heavy"):
+                if res[key] is not None:
+                    res[key].unpersist()
         return n
 
     t("FULL validate_pages job1+job2", full)
